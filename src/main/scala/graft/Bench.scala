@@ -168,29 +168,43 @@ object Bench {
     * names alone are ~6.5 KB), so `queries` carries failed gates first
     * (-1 sentinels must stay visible) then the most expensive gates
     * that fit the budget, `value` stays the FULL-suite total, and
-    * `queries_n`/`queries_full` say how many gates exist and where the
-    * complete map lives. Budget 1700 leaves headroom for an sbt
-    * trailer even though build.sbt now suppresses it. */
+    * `queries_n`/`queries_dropped`/`queries_full` say how many gates
+    * exist, how many the map left out, and where the complete map lives
+    * (`fullPath`, the snapshot file actually written; null when the run
+    * wrote none). Budget 1700 leaves headroom for an sbt trailer even
+    * though build.sbt now suppresses it. */
   private[graft] def compactLine(total: Double,
       queries: Map[String, Double], sfDir: String, cpus: String,
-      budget: Int = 1700): String = {
+      fullPath: Option[String], budget: Int = 1700): String = {
     def fmt(v: Double): String =
       if (v < 0) "-1" else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val cpusJson = cpus.trim.toIntOption.map(_.toString)
-      .getOrElse("\"" + cpus + "\"")
-    val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec"""" +
-      s""","sf":"$sfDir","cpus":$cpusJson,"queries_n":${queries.size}""" +
-      s""","queries_full":"BENCH_LOCAL.json","queries":{"""
-    val sb = new StringBuilder(head)
-    var first = true
-    queries.toSeq
+    val cpusJson = cpus.trim.toIntOption.map(_.toString).getOrElse(jsonString(cpus))
+    def head(dropped: Int): String =
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec"""" +
+        s""","sf":${jsonString(sfDir)},"cpus":$cpusJson,"queries_n":${queries.size}""" +
+        s""","queries_dropped":$dropped""" +
+        s""","queries_full":${fullPath.map(jsonString).getOrElse("null")},"queries":{"""
+    // sized for the widest dropped count, so the final head never overflows
+    val room = budget - head(queries.size).length - 2
+    var used = 0
+    val kept = queries.toSeq
       .sortBy { case (n, v) => (if (v < 0) 0 else 1, -v, n) }
-      .foreach { case (k, v) =>
-        val ent = (if (first) "" else ",") + "\"" + k + "\":" + fmt(v)
-        if (sb.length + ent.length + 2 <= budget) { sb.append(ent); first = false }
+      .flatMap { case (k, v) =>
+        val ent = jsonString(k) + ":" + fmt(v)
+        val cost = ent.length + (if (used == 0) 0 else 1)
+        if (used + cost <= room) { used += cost; Some(ent) } else None
       }
-    sb.append("}}").toString
+    head(queries.size - kept.size) + kept.mkString(",") + "}}"
   }
+
+  /** `s` as a quoted JSON string literal. */
+  private def jsonString(s: String): String =
+    s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }.mkString("\"", "", "\"")
 
   /** AUTO-PROMOTED movers: gates whose freshly-merged sharded wall
     * exceeds 2× + 2 s of the MIN over a WINDOW of prior committed
@@ -554,13 +568,13 @@ object Bench {
       s""""io":${sys.env.getOrElse("SPARK_GRAFT_BENCH_IO", "1") != "0"}""" +
       isolated + "," +
       s""""session":$session,"sf":"$sfDir"}"""
-    commitSnapshot(json,
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json"))
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
+    commitSnapshot(json, outPath)
     println(json)
     // the parsable contract line goes LAST (see compactLine)
     println(compactLine(total, parseNumMap(mapOf(json, "queries")),
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), Some(outPath)))
     outs.foreach(p => try java.nio.file.Files.deleteIfExists(p) catch { case _: Exception => () })
   }
 
@@ -744,7 +758,7 @@ object Bench {
     // readable summary
     println(compactLine(total,
       results.map { case (k, v, _, _, _, _, _, _) => k -> v }.toMap,
-      sfDir, cpus))
+      sfDir, cpus, outPath))
     spark.stop()
   }
 }

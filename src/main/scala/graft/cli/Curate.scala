@@ -94,7 +94,10 @@ object Curate {
   def runMix(spark: SparkSession, sfDir: String, outDir: String,
       totalBudget: Long, tau: Double): MixStats = {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "source", "text")
-    val scored = score(docs).join(docs.select("doc_id", "source"), "doc_id")
+    // the scored lineage (tokenize, score, join) feeds the budgets, the
+    // calibration, the mixture report and the input count: cached for
+    // the call, released before returning
+    val scored = score(docs).join(docs.select("doc_id", "source"), "doc_id").cache()
     val budgetsDf = Curation.temperatureBudgets(scored, col("source"),
       col("ntok"), tau, totalBudget)
     val budgets = budgetsDf.select("key", "budget_tokens").collect()
@@ -121,8 +124,10 @@ object Curate {
     val mix = spark.read.parquet(s"$outDir/mixture")
     val tot = mix.agg(coalesce(sum("sel_docs"), lit(0L)),
       coalesce(sum("sel_tokens"), lit(0L))).head()
-    MixStats(scored.count(), mix.count(), totalBudget,
+    val stats = MixStats(scored.count(), mix.count(), totalBudget,
       tot.getLong(0), tot.getLong(1))
+    scored.unpersist()
+    stats
   }
 
   /** Publish the dataset card for a documents directory: per-source
@@ -203,7 +208,15 @@ object Curate {
   /** Run the full pipeline; returns the per-stage accounting (also
     * written to `outDir/stats.json`, corpus to `outDir/corpus`).
     * `spanMinRun > 0` enables the substring-dedup stage at that
-    * minimum-run threshold (span width 3). */
+    * minimum-run threshold (span width 3).
+    *
+    * The dedup → score → select lineage runs once: the corpus is
+    * written, and every downstream artifact (partials, band index,
+    * digests, schedule, packing, chunks, hot shingles, container index)
+    * and the selected totals are built from the WRITTEN corpus, never
+    * from the lazy lineage, which each action would otherwise re-run.
+    * The exact and near-dup survivor sets stay cached across their
+    * counts and the corpus write, and are released once it is on disk. */
   def run(spark: SparkSession, sfDir: String, outDir: String,
       budget: Long, benchDir: Option[String] = None,
       spanMinRun: Int = 0, paraMinDf: Int = 0,
@@ -245,7 +258,7 @@ object Curate {
     // 1. exact dedup: keep each md5 group's min-id doc
     val exactSurvivors = docs.join(
       Dedup.exactGroups(docs).select(col("keeper").as("doc_id")),
-      Seq("doc_id"), "left_semi")
+      Seq("doc_id"), "left_semi").cache()
     val nExact = exactSurvivors.count()
 
     // 2. near-dup clusters; each cluster keeps its BEST-quality doc
@@ -255,7 +268,7 @@ object Curate {
       Curation.bestPerCluster(
           clusters.join(scoreDocs(exactSurvivors).select("doc_id", "quality"), "doc_id"))
         .select(col("survivor").as("doc_id")),
-      Seq("doc_id"), "left_semi")
+      Seq("doc_id"), "left_semi").cache()
     val nNear = nearSurvivors.count()
 
     // 2.5 optional paragraph-level boilerplate scrub (paraMinDf > 0):
@@ -304,10 +317,10 @@ object Curate {
         col("doc_id"), col("quality"), col("ntok"), budget)
       .filter(col("selected"))
       .withColumnRenamed("id", "doc_id")
-    val corpus = selected
-      .join(deduped, "doc_id")
-      .select("doc_id", "text", "quality", "ntok", "cum_before")
-    corpus.write.mode("overwrite").parquet(s"$outDir/corpus")
+    selected.join(deduped, "doc_id").select("doc_id", "text", "quality", "ntok", "cum_before")
+      .write.mode("overwrite").parquet(s"$outDir/corpus")
+    Seq(exactSurvivors, nearSurvivors).foreach(_.unpersist())
+    val corpus = spark.read.parquet(s"$outDir/corpus")
     // base partial aggregate state for incremental maintenance: the
     // ingest mode merges admitted batches into these without ever
     // re-scanning the corpus (q123/q127 machinery)
@@ -362,7 +375,7 @@ object Curate {
       .write.mode("overwrite").parquet(s"$outDir/hot_shingles")
     Dedup.containerIndex(corpus, shingleN = 3, hot = hotSet)
       .write.mode("overwrite").parquet(s"$outDir/container_index")
-    val agg = selected.agg(count(lit(1)), coalesce(sum("ntok"), lit(0L))).head()
+    val agg = corpus.agg(count(lit(1)), coalesce(sum("ntok"), lit(0L))).head()
     val stats = Stats(nInput, nExact, nNear, spanRemoved, nNear - nClean,
       agg.getLong(0), agg.getLong(1), budget, parasRemoved, nBlocked)
 

@@ -208,7 +208,8 @@ class BenchPromotionSpec extends AnyFunSuite {
 
   test("compactLine fits the driver's 2000-char tail and round-trips") {
     val qs = (1 to 400).map(i => f"q$i%03d_some_longish_gate_name" -> i * 0.123).toMap
-    val line = Bench.compactLine(987.654321, qs, "/root/testdata/sf0.1", "32")
+    val line = Bench.compactLine(987.654321, qs, "/root/testdata/sf0.1", "32",
+      Some("BENCH_LOCAL.json"))
     assert(line.length <= 1700, s"line too long: ${line.length}")
     assert(line.startsWith("""{"metric":"total","value":987.654,"unit":"sec""""))
     assert(line.contains(""""cpus":32"""))
@@ -229,14 +230,47 @@ class BenchPromotionSpec extends AnyFunSuite {
   test("compactLine keeps -1 failure sentinels ahead of big walls") {
     val qs = (1 to 300).map(i => f"q$i%03d_gate_with_a_long_name_padding" -> 100.0).toMap +
       ("q999_failed_gate" -> -1.0)
-    val line = Bench.compactLine(1.0, qs, "/sf", "8")
+    val line = Bench.compactLine(1.0, qs, "/sf", "8", Some("BENCH_LOCAL.json"))
     assert(line.contains(""""q999_failed_gate":-1"""))
   }
 
   test("compactLine with few queries includes them all") {
     val qs = Map("q01_a" -> 1.5, "q02_b" -> -1.0)
-    val line = Bench.compactLine(0.5, qs, "/sf", "notanint")
+    val line = Bench.compactLine(0.5, qs, "/sf", "notanint", Some("BENCH_LOCAL.json"))
     assert(line.contains(""""q01_a":1.500""") && line.contains(""""q02_b":-1"""))
     assert(line.contains(""""cpus":"notanint""""))
+  }
+
+  test("compactLine names the snapshot file the run wrote, or null when it wrote none") {
+    val qs = Map("q01_a" -> 1.5)
+    val line = Bench.compactLine(1.5, qs, "/sf", "8", Some("/tmp/bench out/run_7.json"))
+    assert(line.contains(""""queries_full":"/tmp/bench out/run_7.json""""), line)
+    assert(!line.contains("BENCH_LOCAL.json"), line)
+    val none = Bench.compactLine(1.5, qs, "/sf", "8", None)
+    assert(none.contains(""""queries_full":null"""), none)
+  }
+
+  test("compactLine JSON-escapes the sf dir and a non-integer cpus") {
+    val line = Bench.compactLine(1.0, Map("q01_a" -> 1.0),
+      "C:\\data\\sf \"0.1\"", "4\"\n", Some("BENCH_LOCAL.json"))
+    assert(line.contains(""""sf":"C:\\data\\sf \"0.1\"""""), line)
+    assert(line.contains("\"cpus\":\"4\\\"\\u000a\","), line)
+    assert(!line.contains("\n"), "a raw newline would split the contract line")
+    // every string value re-reads as a complete JSON string token: the
+    // line's quotes pair up once escaped quotes are removed
+    assert(line.replace("\\\\", "").replace("\\\"", "").count(_ == '"') % 2 == 0, line)
+  }
+
+  test("compactLine counts the gates the byte budget left out") {
+    val qs = (1 to 400).map(i => f"q$i%03d_some_longish_gate_name" -> i * 0.123).toMap
+    val line = Bench.compactLine(1.0, qs, "/sf", "8", Some("BENCH_LOCAL.json"))
+    assert(line.length <= 1700, s"line too long: ${line.length}")
+    val body = line.substring(line.indexOf("\"queries\":{") + 11, line.length - 2)
+    val kept = Bench.parseNumMap(body).size
+    assert(kept > 0 && kept < qs.size)
+    assert(line.contains(s""""queries_dropped":${qs.size - kept},"""), line)
+    val all = Bench.compactLine(1.0, Map("q01_a" -> 1.0, "q02_b" -> -1.0), "/sf", "8",
+      Some("BENCH_LOCAL.json"))
+    assert(all.contains(""""queries_dropped":0,"""), all)
   }
 }

@@ -1,6 +1,13 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.model.{AlsModel, HybridModel, Recommender, UserCF}
 import graft.multimodal.Multimodal
@@ -691,6 +698,61 @@ class PipelineSpec extends SparkSpec {
       "span dedup rewrites text, it must not change the survivor set")
   }
 
+  test("Curate artifacts equal their operators recomputed over the written corpus") {
+    import graft.operators.Dedup
+    val out = graft.core.TempPaths.registered(
+      java.nio.file.Files.createTempDirectory("graft_curate_art")).toString
+    // a budget above the corpus size keeps every survivor: the most rows
+    val s = graft.cli.Curate.run(spark, sf(), out, budget = Long.MaxValue / 4)
+    val corpus = spark.read.parquet(s"$out/corpus")
+    def artifact(name: String): DataFrame = spark.read.parquet(s"$out/$name")
+    def sameRows(name: String, expected: DataFrame): Unit = {
+      val got = artifact(name)
+      assert(got.columns.toSeq == expected.columns.toSeq, name)
+      assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
+        s"$name differs from its operator over the written corpus")
+    }
+    sameRows("band_index",
+      Dedup.corpusBandIndex(spark, corpus, k = 16, rowsPerBand = 2, shingleN = 3))
+    sameRows("digests", corpus.select(md5(col("text")).as("digest")).distinct())
+    val tot = corpus.agg(count(lit(1)), sum("ntok")).head()
+    val part = artifact("partials").select("n", "s").head()
+    assert(part.getLong(0) == tot.getLong(0))
+    assert(part.getDecimal(1).longValueExact() == tot.getLong(1))
+    assert(artifact("hot_shingles").orderBy("rank").select("shingle").collect()
+      .map(_.getString(0)).toSeq == Dedup.hotShingles(corpus, shingleN = 3, k = 64))
+    val ids = corpus.select("doc_id").collect().map(_.getLong(0)).toSet
+    Seq("order" -> "id", "packing" -> "id", "chunks" -> "doc_id",
+        "container_index" -> "corpus_id").foreach { case (name, c) =>
+      assert(artifact(name).select(c).distinct().collect().map(_.getLong(0)).toSet == ids,
+        s"$name covers a doc set other than the corpus")
+    }
+    assert(s.nSelected == tot.getLong(0) && s.tokensSelected == tot.getLong(1))
+    val statsJson = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(out, "stats.json"))
+    assert(statsJson.contains(s""""n_selected":${tot.getLong(0)},"""))
+    assert(statsJson.contains(s""""tokens_selected":${tot.getLong(1)},"""))
+  }
+
+  test("Curate runs its dedup lineage once: few actions scan the input documents") {
+    val input = s"${sf()}/documents.parquet"
+    val scans = new InputScans(input)
+    val out = graft.core.TempPaths.registered(
+      java.nio.file.Files.createTempDirectory("graft_curate_scans")).toString
+    spark.listenerManager.register(scans)
+    try {
+      graft.cli.Curate.run(spark, sf(), out, budget = 5000L)
+      drainListenerBus()
+    } finally spark.listenerManager.unregister(scans)
+    // four actions read the input: its count, the exact-survivor cache
+    // fill, and the schedule's source lookup (percentile pass and
+    // write). A build that re-runs the lineage for every artifact and
+    // count reads it in 18.
+    assert(scans.actions > 0, "the listener saw no scan of the input at all")
+    assert(scans.actions <= 4,
+      s"${scans.actions} actions scanned $input during Curate.run")
+  }
+
   test("Curate classifier-quality mode trains in-engine and keeps invariants") {
     val out = graft.core.TempPaths.registered(
       java.nio.file.Files.createTempDirectory("graft_curate_clf")).toString
@@ -1211,5 +1273,43 @@ class PipelineSpec extends SparkSpec {
       }
     }
     assert(spark.conf.get(key) == before)
+  }
+
+  /** Waits until every event posted so far has reached its listeners.
+    * `listenerBus` is package-private to Spark, so it is reached by
+    * reflection (as SessionHygiene does). */
+  private def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    ()
+  }
+
+  /** Counts the actions whose executed plan reads the parquet files at
+    * `path`. A scan counts when its output-row metric grows during the
+    * action, so a scan inside a cached relation counts for the action
+    * that fills the cache and not for the actions that read the cache. */
+  private class InputScans(path: String) extends QueryExecutionListener
+      with AdaptiveSparkPlanHelper {
+    private val seen = mutable.Map.empty[Long, Long]
+    @volatile var actions = 0
+
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      synchronized {
+        val grown = scansOf(qe.executedPlan).count { scan =>
+          val m = scan.metrics("numOutputRows")
+          m.value > seen.put(m.id, m.value).getOrElse(0L)
+        }
+        if (grown > 0) actions += 1
+      }
+
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+
+    private def scansOf(plan: SparkPlan): Seq[FileSourceScanExec] =
+      collectWithSubqueries(plan) {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.toUri.getPath == path) => Seq(s)
+        case m: InMemoryTableScanExec => scansOf(m.relation.cachedPlan)
+      }.flatten
   }
 }
